@@ -66,8 +66,11 @@ class BucketedMergeSink:
         )
 
     def _exists(self) -> bool:
+        # The ``__bucket=<n>`` partition dirs start with "_" like Spark's
+        # ``_SUCCESS``/``_temporary`` markers, but they hold the data.
         return os.path.isdir(self.target_dir) and any(
-            not e.startswith(("_", ".")) for e in os.listdir(self.target_dir)
+            e.startswith(f"{BUCKET_COL}=") or not e.startswith(("_", "."))
+            for e in os.listdir(self.target_dir)
         )
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:

@@ -9,11 +9,14 @@ tick range per micro-batch: if a batch starts past the last position we
 processed (+1), the ticks in between were lost upstream (WAL truncation,
 envelope files deleted, broker retention).
 
-The check is two scalar aggregates per micro-batch (min/max of ``tick``)
-— a driver-side probe whose cost does not scale with the data, run on
-the RAW envelope batch before op-type filtering (transaction markers
-2200/2201/2202 occupy ticks too, so the raw stream is where tick space
-is dense).
+The check needs min/max of ``tick`` and the row count per micro-batch,
+taken on the RAW envelope batch before op-type filtering (transaction
+markers 2200/2201/2202 occupy ticks too, so the raw stream is where tick
+space is dense). ``CdcPipeline`` attaches these aggregates to the batch
+as observed metrics (``DataFrame.observe``), so they are computed by the
+batch's own write and cost no Spark job; ``observe`` runs them as a
+standalone aggregate for callers holding a plain DataFrame. Both feed
+``record``, which does the gap check and the progress log.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -61,30 +64,41 @@ class TickGapMonitor:
     gaps: list[TickGap] = field(default_factory=list)
     progress: list[BatchProgress] = field(default_factory=list)
 
-    def observe(self, batch: DataFrame, batch_id: int) -> TickGap | None:
-        row = batch.agg(
-            F.min(F.col(self.tick_col).cast("long")).alias("mn"),
-            F.max(F.col(self.tick_col).cast("long")).alias("mx"),
+    def metrics(self) -> list[Column]:
+        """The probe's aggregates: ``mn``/``mx`` tick and ``n`` rows."""
+        tick = F.col(self.tick_col).cast("long")
+        return [
+            F.min(tick).alias("mn"),
+            F.max(tick).alias("mx"),
             F.count("*").alias("n"),
-        ).first()
-        if row is None or row.mn is None:
-            return None  # empty batch
+        ]
+
+    def observe(self, batch: DataFrame, batch_id: int) -> TickGap | None:
+        """Aggregate ``batch`` (one Spark job) and ``record`` the result."""
+        row = batch.agg(*self.metrics()).first()
+        return self.record(batch_id, row.mn, row.mx, row.n)
+
+    def record(
+        self, batch_id: int, mn: int | None, mx: int | None, n: int
+    ) -> TickGap | None:
+        """Log one batch's tick range and row count and check it against
+        the high-water mark; returns the gap it opens, if any. An empty
+        batch (``mn`` is None) is ignored."""
+        if mn is None:
+            return None
         self.progress.append(
-            BatchProgress(
-                batch_id=batch_id, tick_from=row.mn, tick_to=row.mx,
-                n_envelopes=row.n,
-            )
+            BatchProgress(batch_id=batch_id, tick_from=mn, tick_to=mx, n_envelopes=n)
         )
         gap = None
-        if self.last_tick is not None and row.mn > self.last_tick + 1:
+        if self.last_tick is not None and mn > self.last_tick + 1:
             gap = TickGap(
                 batch_id=batch_id,
                 expected_from=self.last_tick + 1,
-                observed_from=row.mn,
-                missing=row.mn - self.last_tick - 1,
+                observed_from=mn,
+                missing=mn - self.last_tick - 1,
             )
             self.gaps.append(gap)
             if self.on_gap is not None:
                 self.on_gap(gap)
-        self.last_tick = max(self.last_tick or 0, row.mx)
+        self.last_tick = max(self.last_tick or 0, mx)
         return gap

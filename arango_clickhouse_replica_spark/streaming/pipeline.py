@@ -35,12 +35,12 @@ import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cdc import latest_alive, latest_state, preprocess_envelopes
-from ..schema.dsl import TableMapping, compile_mapping
+from ..schema.dsl import CompiledMapping, TableMapping, compile_mapping
 from .merge_sink import BucketedMergeSink
 from .monitor import TickGapMonitor
 
@@ -79,6 +79,9 @@ class CdcPipeline:
         # unterminated rows persist in a pending buffer unioned into the
         # next batch. Requires `tid` on the envelope wire.
         self.txn_atomic = txn_atomic
+        # (mapping, input schema, compiled): compiling costs ~1k py4j round
+        # trips, so it is paid once, not per micro-batch.
+        self._compiled: tuple[TableMapping, T.StructType, CompiledMapping] | None = None
 
     # -- txn-atomic pending buffer -------------------------------------------
 
@@ -141,11 +144,31 @@ class CdcPipeline:
 
     # -- write path ---------------------------------------------------------
 
+    def _compiled_mapping(self, schema: T.StructType) -> CompiledMapping:
+        """``self.mapping`` compiled against ``schema``; recompiled only
+        when the mapping object is replaced (e.g. by
+        ``apply_migration_plan``) or the input schema changes."""
+        cached = self._compiled
+        if cached is None or cached[0] is not self.mapping or cached[1] != schema:
+            cached = (self.mapping, schema, compile_mapping(self.mapping, schema))
+            self._compiled = cached
+        return cached[2]
+
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        # The batch feeds up to four actions (monitor agg, dead-letter
-        # write, merge-sink bucket probe, target write) — pin it so the
-        # source read + transform run once, not once per action.
-        multi_action = self.tick_monitor is not None or (
+        observation = None
+        if self.tick_monitor is not None and "tick" in batch.columns:
+            # A2: tick-continuity probe on the RAW batch (pre-filter —
+            # txn markers occupy ticks too), publisher.py:140-141 analog.
+            # Observed metrics ride along the batch's first action instead
+            # of running an aggregate job of their own.
+            observation = Observation()
+            batch = batch.observe(observation, *self.tick_monitor.metrics())
+        # The batch may feed several actions (dead-letter write, txn
+        # pending write, merge-sink bucket probe, target write) — pin it
+        # so the source read + transform run once, not once per action.
+        # Pinning also makes the observed node run once: later actions,
+        # and the txn gate's two reads, scan the cache.
+        multi_action = (
             self.mapping is not None and self.dead_letter_dir is not None
         ) or self.merge_sink is not None or self.txn_atomic
         # Keep the persisted handle in its own name: _txn_gate rebinds
@@ -156,10 +179,6 @@ class CdcPipeline:
             raw = batch.persist()
             batch = raw
         try:
-            if self.tick_monitor is not None and "tick" in batch.columns:
-                # A2: tick-continuity probe on the RAW batch (pre-filter —
-                # txn markers occupy ticks too), publisher.py:140-141 analog.
-                self.tick_monitor.observe(batch, batch_id)
             if self.txn_atomic and "tid" in batch.columns:
                 batch = self._txn_gate(batch, batch_id)
             rows = preprocess_envelopes(
@@ -168,13 +187,14 @@ class CdcPipeline:
                 initial_tick=self.initial_tick,
             )
             if self.mapping is not None:
-                compiled = compile_mapping(self.mapping, rows.schema)
+                schema = rows.schema
+                compiled = self._compiled_mapping(schema)
                 # Re-attach _ver/_deleted when the mapping does not declare
                 # them: without _ver, latest() raises; without _deleted,
                 # latest_alive() silently stops filtering soft deletes.
                 declared = {p.name for p in self.mapping.properties}
                 meta = [c for c in ("_ver", "_deleted")
-                        if c not in declared and c in rows.columns]
+                        if c not in declared and c in schema.names]
                 result = compiled.apply(rows, passthrough=meta)
                 rows = result.valid
                 if self.dead_letter_dir is not None:
@@ -189,6 +209,11 @@ class CdcPipeline:
                 self.merge_sink.apply_batch(rows, batch_id)
             else:
                 rows.write.mode("append").parquet(self.target_dir)
+            if observation is not None:
+                # Every path above ran at least one action over the
+                # observed batch, so the metrics are filled.
+                m = observation.get
+                self.tick_monitor.record(batch_id, m["mn"], m["mx"], m["n"])
         finally:
             if multi_action:
                 raw.unpersist()

@@ -11,7 +11,10 @@ from arango_clickhouse_replica_spark.sources.cdc_envelopes import (
     synthetic_event_envelopes,
 )
 from arango_clickhouse_replica_spark.streaming import CdcPipeline
-from arango_clickhouse_replica_spark.streaming.merge_sink import BucketedMergeSink
+from arango_clickhouse_replica_spark.streaming.merge_sink import (
+    BUCKET_COL,
+    BucketedMergeSink,
+)
 
 
 @pytest.fixture
@@ -90,7 +93,13 @@ def test_merge_sink_touches_only_affected_buckets(spark, tmp_path, env):
     one.write.mode("overwrite").parquet(upd_dir)
     from arango_clickhouse_replica_spark.operators.cdc import preprocess_envelopes
 
-    sink.apply_batch(preprocess_envelopes(spark.read.parquet(upd_dir)), batch_id=1)
+    before = {(r.event_id, r.value) for r in sink.read_alive().collect()}
+    upd = preprocess_envelopes(spark.read.parquet(upd_dir))
+    (key, value), = [(r.event_id, r.value) for r in upd.collect()]
+    sink.apply_batch(upd, batch_id=1)
+
+    after = {(r.event_id, r.value) for r in sink.read_alive().collect()}
+    assert after == {(k, v) for k, v in before if k != key} | {(key, value)}
 
     changed = [
         e
@@ -119,3 +128,20 @@ def test_compact_preserves_bucket_layout(spark, tmp_path, env):
 
     sink.apply_batch(preprocess_envelopes(batch), batch_id=1000)
     assert {(r.event_id, r.value) for r in sink.read_alive().collect()} == before
+
+
+def test_merge_sink_keeps_earlier_batches_in_shared_bucket(spark, tmp_path):
+    """Two batches whose different keys hash into the same bucket: the
+    second merge must keep the first batch's row, not overwrite the
+    bucket with its own rows alone."""
+    sink = BucketedMergeSink(
+        spark, str(tmp_path / "target"), keys=["event_id"], n_buckets=4
+    )
+    schema = "event_id long, value double, _ver long, _deleted int"
+    keyed = sink._bucket(spark.range(1, 20).withColumnRenamed("id", "event_id"))
+    buckets = {r.event_id: r[BUCKET_COL] for r in keyed.collect()}
+    a, b = [k for k in buckets if buckets[k] == buckets[1]][:2]
+    sink.apply_batch(spark.createDataFrame([(a, 1.0, 1, 0)], schema), batch_id=0)
+    sink.apply_batch(spark.createDataFrame([(b, 2.0, 2, 0)], schema), batch_id=1)
+    got = {(r.event_id, r.value) for r in sink.read_alive().collect()}
+    assert got == {(a, 1.0), (b, 2.0)}

@@ -136,3 +136,113 @@ def test_schema_evolution_across_restarts(spark, tmp_path):
     assert set(rows) == {10, 20}
     assert rows[20].email == "x@y.z"
     assert rows[10].email is None  # pre-evolution row, null-backfilled
+
+
+def _counting_compile(monkeypatch):
+    """Count compile_mapping calls made by the pipeline."""
+    from arango_clickhouse_replica_spark.streaming import pipeline
+
+    calls = []
+    real = pipeline.compile_mapping
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "compile_mapping", counted)
+    return calls
+
+
+_CONTACTS = "tick long, type int, cuid string, data struct<id:long, name:string>"
+_CONTACTS_V2 = (
+    "tick long, type int, cuid string, "
+    "data struct<id:long, name:string, email:string>"
+)
+
+
+def _contacts_mapping(**extra):
+    from arango_clickhouse_replica_spark.schema.dsl import TableMapping
+
+    return TableMapping.from_dict(
+        {
+            "primary_key": ["id"],
+            "properties": {
+                "id": {"type": "int"},
+                "name": {"type": "str"},
+                "email": {"type": "str"},
+                **extra,
+            },
+        }
+    )
+
+
+def test_mapping_compiles_once_per_stream(spark, tmp_path, monkeypatch):
+    """Batches with the same mapping object and input schema reuse one
+    compiled mapping instead of recompiling per micro-batch."""
+    calls = _counting_compile(monkeypatch)
+    env_dir = str(tmp_path / "env")
+    for t in range(3):
+        spark.createDataFrame(
+            [(t + 1, 2300, "c1", (t, f"n{t}"))], _CONTACTS
+        ).coalesce(1).write.mode("append").parquet(env_dir)
+    pipe = CdcPipeline(
+        spark,
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        keys=["id"],
+        mapping=_contacts_mapping(),
+    )
+    q = pipe.start(env_dir, spark.read.parquet(env_dir).schema,
+                   max_files_per_trigger=1)
+    q.awaitTermination()
+    assert len(q.recentProgress) == 3
+    assert len(calls) == 1
+    assert {r.id for r in pipe.latest_alive().collect()} == {0, 1, 2}
+
+
+def test_replaced_mapping_recompiles(spark, tmp_path, monkeypatch):
+    """Assigning a new mapping between batches recompiles, and the next
+    batch is mapped by the new rules."""
+    calls = _counting_compile(monkeypatch)
+    pipe = CdcPipeline(
+        spark,
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        keys=["id"],
+        mapping=_contacts_mapping(),
+    )
+    pipe._apply_batch(
+        spark.createDataFrame([(1, 2300, "c1", (10, "a"))], _CONTACTS), batch_id=0
+    )
+    pipe.mapping = _contacts_mapping(label={"type": "str", "ref": "name"})
+    pipe._apply_batch(
+        spark.createDataFrame([(2, 2300, "c1", (20, "b"))], _CONTACTS), batch_id=1
+    )
+    assert len(calls) == 2
+    rows = {r.id: r for r in pipe.latest().collect()}
+    assert rows[20].label == "b"
+    assert rows[10].label is None  # written before the new rule existed
+
+
+def test_changed_input_schema_recompiles(spark, tmp_path, monkeypatch):
+    """A source that gains a field the mapping refers to recompiles: a
+    stale compile would still treat the field as statically absent."""
+    calls = _counting_compile(monkeypatch)
+    pipe = CdcPipeline(
+        spark,
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        keys=["id"],
+        mapping=_contacts_mapping(),
+    )
+    pipe._apply_batch(
+        spark.createDataFrame([(1, 2300, "c1", (10, "a"))], _CONTACTS), batch_id=0
+    )
+    pipe._apply_batch(
+        spark.createDataFrame([(2, 2300, "c1", (20, "b", "x@y.z"))], _CONTACTS_V2),
+        batch_id=1,
+    )
+    assert len(calls) == 2
+    rows = {r.id: r for r in pipe.latest().collect()}
+    assert rows[20].email == "x@y.z"
+    assert rows[10].email is None
